@@ -128,14 +128,14 @@ def main() -> None:
     #                   specialization, JIT tiering, and every
     #                   one-time materialization.
     #   recompute-warm  best of N runs, each preceded by
-    #                   plan_cache.clear_materializations(spark):
-    #                   operator memos, released checkpoints, trained
-    #                   models, the block cache, and SINGLE-tier
-    #                   prepared plans are all dropped; DURABLE-tier
-    #                   prepared plans (r15, plan_cache.py — pure lazy
-    #                   trees whose cache markers are re-armed empty)
-    #                   are RETAINED, so reps skip only the py4j plan
-    #                   rebuild (0.2-0.9 s driver cost) while every
+    #                   plan_cache.clear_materializations(spark): every
+    #                   registry memo with the "recompute" policy
+    #                   (operator memos, released checkpoints, trained
+    #                   models) and the block cache are dropped; the
+    #                   "prepared" tier of plans (plan_cache.py — pure
+    #                   lazy trees whose cache markers are re-armed
+    #                   empty) is RETAINED, so reps skip only the py4j
+    #                   plan rebuild (0.2-0.9 s driver cost) while every
     #                   timed run still re-executes the FULL
     #                   distributed dataflow with a hot JVM.  This is
     #                   the HEADLINE ratio.  DATA work is
@@ -229,9 +229,9 @@ def main() -> None:
                 jobs_sink.append(_max_job_id() - j0)
             return dt
 
-        # cold pays plan construction too: drop BOTH prepared-plan
-        # tiers (recompute reps below keep the durable tier — the
-        # analyzed-tree retention is exactly what it exists for)
+        # cold pays plan construction too: drop the prepared tier
+        # (recompute reps below keep it — the analyzed-tree retention
+        # is exactly what it exists for)
         clear_materializations(spark, drop_prepared_plans=True)
         cold_jobs_sink: list[int] = []
         cold[name] = round(timed_run(jobs_sink=cold_jobs_sink), 3)

@@ -16,7 +16,7 @@ Layout
 - ``sources/``   : parquet lake scans, synthetic event fabric, Kafka+Avro
 - ``operators/`` : relational query inventory + dedup/similarity/text/multimodal
 - ``functions/`` : scalar expression helpers (SURVEY §2.7)
-- ``plans/``     : plan-inspection utilities (pushdown/broadcast assertions)
+- ``plans/``     : plan-inspection utility (formatted physical plan string)
 - ``streaming/`` : structured-streaming ingest (SURVEY §2.8)
 """
 

@@ -22,8 +22,8 @@ no consumer will scan the frame again — lineage was truncated, so
 the data is unrecoverable afterwards.
 
 ``memo_local_checkpoint`` fixes (2): one checkpoint per
-(SparkSession, logical plan), the same session-keyed memo discipline
-as ``schema.load_table`` — repeated calls reuse the single
+(SparkSession, logical plan) through the session memo registry
+(``plan_cache.PlanMemo``) — repeated calls reuse the single
 materialized copy instead of stacking new ones.
 """
 
@@ -31,7 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from .plan_cache import evict_dead_sessions
+from .plan_cache import PlanMemo
 
 __all__ = ["release_local_checkpoint", "memo_local_checkpoint"]
 
@@ -72,15 +72,9 @@ def release_local_checkpoint(df: DataFrame) -> None:
     df.unpersist()
 
 
-# (applicationId, semanticHash) → [(original frame, its checkpoint)].
-# The original frame is kept so a hash collision is detected by
-# sameSemantics instead of silently serving the wrong data; colliding
-# plans coexist as separate memo-owned entries in the same bucket
-# (collisions are rare, the scan is sameSemantics over a tiny list) —
-# returning an unmemoized per-call checkpoint on collision would leak
-# it, since callers treat every return as memo-owned and never
-# release it themselves.
-_CKPT_MEMO: dict[tuple[str, int], list[tuple[DataFrame, DataFrame]]] = {}
+# one checkpoint per (session, logical plan); dropped — and its blocks
+# freed — by every recompute reset
+_CKPT_MEMO = PlanMemo("recompute", release=release_local_checkpoint)
 
 
 def memo_local_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
@@ -98,12 +92,4 @@ def memo_local_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     LPA rounds) should NOT go through the memo: they are dead once
     the loop advances and must be released instead.
     """
-    evict_dead_sessions(_CKPT_MEMO)
-    key = (df.sparkSession.sparkContext.applicationId, df.semanticHash())
-    bucket = _CKPT_MEMO.setdefault(key, [])
-    for orig, ck in bucket:
-        if df.sameSemantics(orig):
-            return ck
-    ck = df.localCheckpoint(eager=eager)
-    bucket.append((df, ck))
-    return ck
+    return _CKPT_MEMO.lookup(df, lambda: df.localCheckpoint(eager=eager))

@@ -1,7 +1,5 @@
 from .scalar import (  # noqa: F401
-    avg_exact,
     confluent_header,
     money,
-    money_sum,
     strip_confluent_header,
 )

@@ -29,20 +29,6 @@ def money(col: Column | str) -> Column:
     return c.cast(MONEY)
 
 
-def money_sum(col: Column, alias: str) -> Column:
-    """Exact decimal sum, surfaced as DOUBLE (matches oracle CAST)."""
-    return F.sum(col).cast("double").alias(alias)
-
-
-def avg_exact(sum_col: Column, count_col: Column, alias: str) -> Column:
-    """avg as exact-decimal-sum / count, evaluated in double.
-
-    Both engines perform the identical single IEEE division, so the
-    result is bit-stable, unlike a native AVG over doubles.
-    """
-    return (sum_col.cast("double") / count_col.cast("double")).alias(alias)
-
-
 def strip_confluent_header(value: Column) -> Column:
     """Drop the 5-byte Confluent wire-format prefix (magic byte 0x0 +
     4-byte schema id) from a Kafka message value, leaving the raw Avro

@@ -23,7 +23,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..checkpoints import memo_local_checkpoint, release_local_checkpoint
-from ..plan_cache import evict_dead_sessions, plan_memo
+from ..plan_cache import Memo
 from ..functions.scalar import money
 from ..schema import load_table, table_row_count
 from ..session import default_parallelism
@@ -1289,7 +1289,7 @@ PR_DAMP_NUM, PR_DAMP_DEN = 85, 100  # damping 0.85 as an integer ratio
 # and re-cached/re-checkpointed its own copy.  One bounded resident
 # entry per (session, sf) — the graph family's "signature table",
 # same policy as the simhash signature cache (dedup.py).
-_TRADE_EDGES_MEMO: dict[tuple[str, str], DataFrame] = {}
+_TRADE_EDGES_MEMO = Memo("recompute", release=DataFrame.unpersist)
 
 
 def _trade_edges(spark: SparkSession, sf: str) -> DataFrame:
@@ -1297,8 +1297,7 @@ def _trade_edges(spark: SparkSession, sf: str) -> DataFrame:
     lineitem⋈orders pairs with bipartite node ids (2·suppkey /
     2·custkey+1), both directions materialized, cached once per
     session+sf (memo above — do NOT unpersist; the memo owns it)."""
-    evict_dead_sessions(_TRADE_EDGES_MEMO)
-    key = (spark.sparkContext.applicationId, sf.rstrip("/"))
+    key = _TRADE_EDGES_MEMO.key(spark, sf.rstrip("/"))
     hit = _TRADE_EDGES_MEMO.get(key)
     if hit is not None:
         return hit
@@ -1657,7 +1656,7 @@ KMV_K = 32  # k-minimum-values sketch size
 # jobs (e.count + deg.count) over the cached frame — pure job-boundary
 # floor at local scale.  The stats are computed inside the ONE
 # materializing job below.
-_COPURCHASE_MEMO: dict[tuple, tuple[DataFrame, int, int]] = {}
+_COPURCHASE_MEMO = Memo("recompute", release=lambda stats: stats[0].unpersist())
 
 
 def _copurchase_edges(spark: SparkSession, sf: str) -> DataFrame:
@@ -1694,8 +1693,7 @@ def _copurchase_stats(spark: SparkSession, sf: str) -> tuple:
     # construction AND the materializing count (the cached plan
     # captures session conf at registration); consumers see only the
     # committed cache.
-    evict_dead_sessions(_COPURCHASE_MEMO)
-    key = (spark.sparkContext.applicationId, sf.rstrip("/"), PAIR_MIN_SUPPORT)
+    key = _COPURCHASE_MEMO.key(spark, sf.rstrip("/"), PAIR_MIN_SUPPORT)
     hit = _COPURCHASE_MEMO.get(key)
     if hit is not None:
         return hit
@@ -1841,7 +1839,6 @@ def _oriented_copurchase(spark: SparkSession, sf: str):
     return memo_local_checkpoint(oriented), n_edges, n_nodes
 
 
-@plan_memo("TRIANGLE_BROADCAST_MAX", "PAIR_MIN_SUPPORT")
 def graph_triangle_count(spark: SparkSession, sf: str) -> DataFrame:
     """Triangle counting over the co-purchase graph with DEGREE-ORDERED
     orientation (compact-forward): each undirected edge is directed

@@ -29,7 +29,6 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..checkpoints import memo_local_checkpoint
-from ..plan_cache import plan_memo
 from ..schema import load_table
 from .dedup import (
     _MINHASH_BANDS_CTE,
@@ -1209,7 +1208,6 @@ GLOBAL_SHUFFLE_SALT = "epoch0"  # seed: change per epoch for a new order
 GLOBAL_SHUFFLE_SHARD = 256  # docs per training shard
 
 
-@plan_memo("GLOBAL_SHUFFLE_SALT", "GLOBAL_SHUFFLE_SHARD")
 def curation_global_shuffle(spark: SparkSession, sf: str) -> DataFrame:
     """Seeded global shuffle + shard assignment — the reproducible
     pseudorandom permutation a training run needs before packing

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..plan_cache import Memo
 from ..schema import load_table
 
 
@@ -473,7 +474,7 @@ def events_time_rollup(spark: SparkSession, sf: str) -> DataFrame:
 
 # staged alternate-format copies of the orders table per
 # (applicationId, sf, fmt) — written once, reclaimed at exit
-_FMT_STAGE_MEMO: dict = {}
+_FMT_STAGE_MEMO = Memo("retained")
 
 
 def _orders_in_format(spark: SparkSession, sf: str, fmt: str) -> DataFrame:
@@ -488,7 +489,7 @@ def _orders_in_format(spark: SparkSession, sf: str, fmt: str) -> DataFrame:
     import shutil
     import tempfile
 
-    key = (spark.sparkContext.applicationId, sf.rstrip("/"), fmt)
+    key = _FMT_STAGE_MEMO.key(spark, sf.rstrip("/"), fmt)
     stage = _FMT_STAGE_MEMO.get(key)
     o = load_table(spark, sf, "orders")
     if stage is None:

@@ -1,103 +1,185 @@
-"""Prepared-plan layer: memoize built (lazy) DataFrames per session.
+"""Session memo registry: every engine-owned memo, and prepared plans.
 
-Building a DataFrame plan from Python is not free: every column
-expression, join, and alias is a py4j round trip, and ``cache()`` /
-``semanticHash()`` trigger JVM-side analysis of the whole tree.  For
-the expression-heavy operators (MinHash families, SimHash banding,
-the seeded global shuffle) the measured DRIVER-side build cost is
-0.2–0.9 s per call at any scale factor — pure fixed overhead that
-(a) dwarfs the sub-second execution of these queries at bench scale
-and (b) inflates further when the driver host is loaded, because it
-is hundreds of serialized py4j latencies (the r10 driver-bench drift
-on exactly these queries).
+The engine memoizes driver-side work so repeated calls in one session
+do not pay it again: table handles, trained models, edge lists,
+candidate counts, converged CC labels, local checkpoints, staged
+fixture copies, and prepared plans.  Every such memo is a ``Memo``
+declared at module level and registered here, and the registry owns
+the four things each of them used to hand-roll:
 
-``plan_memo`` gives an operator prepared-statement semantics: the
-FIRST call per (session, sf, gate-constants) builds the plan; later
-calls return the same DataFrame object.  Two distinct things are
-saved on warm calls: (a) the py4j plan build is skipped for every
-wrapped operator, and (b) where the builder itself owns a
-``cache()``/``localCheckpoint()`` of a shared intermediate (MinHash
-signatures, the oriented edge list, the near-dup pair graph), warm
-actions read those materialized intermediates instead of recomputing
-them — that is answer-fragment caching, not just plan caching, and
-it is why bench reports a separate RECOMPUTE-warm column that calls
-``clear_materializations(spark)`` between timed reps (block cache,
-memos, and single-tier plans all dropped; durable-tier plans are
-retained BY DESIGN — their re-armed caches repopulate from a full
-re-execution — while cold runs add ``drop_prepared_plans=True`` to
-pay plan construction too; the growth batteries use the same reset).
-At 100 TB the saved plan-build work is the same fixed driver cost
-(plan building does not scale with data); the cached intermediates
-are doc-count-sized tables any production system would persist.
+1. THE KEY.  ``Memo.key(spark, *parts)`` prefixes every key with the
+   session's ``applicationId``; ``PlanMemo.lookup(df, build)`` keys by
+   logical plan instead (``semanticHash`` bucket, ``sameSemantics``
+   match, so a hash collision can never serve the wrong entry).
+2. DEAD-SESSION EVICTION.  PySpark allows ONE live SparkContext per
+   process, so every lookup drops the memo's entries owned by any
+   other ``applicationId`` — a long-lived process that restarts its
+   session (test runners, notebooks) never holds py4j handles to a
+   stopped JVM.
+3. RELEASE.  Each memo declares one release hook (unpersist an edge
+   cache, free a checkpoint's blocks) run on every entry it drops.
+4. RESET POLICY.  ``clear_materializations`` is a loop over the
+   registry, and each memo declares which resets drop it:
 
-Two tiers (r15): ``plan_memo`` entries are dropped by
-``clear_materializations`` (their plans may reference cleared
-memos/checkpoints); ``durable_plan_memo`` entries survive it — pure
-lazy trees whose only materialization points are ``cached()``
-markers, re-armed on warm hits so recompute reps skip ONLY the py4j
-tree build, never any data work (contract pinned by
-``test_durable_plan_memo_contract`` and the eligibility tripwire in
-``test_properties.py``).
+   - ``recompute``: derived compute (models, indexes, pair graphs,
+     edges, labels, candidate counts, checkpoints), dropped by every
+     ``clear_materializations`` so a recompute rep re-executes it;
+   - ``prepared``: the prepared-plan tier below, dropped only with
+     ``drop_prepared_plans=True`` (cold paths pay plan construction);
+   - ``retained``: lazy table handles (the catalog role) and one-shot
+     staged fixture/sink artifacts, whose re-write would leak a copy
+     per rep — the artifact is the test subject, not a cached answer.
 
-Rules for wrapping an operator:
+Prepared plans.  Building a DataFrame plan from Python is not free:
+every column expression, join and alias is a py4j round trip, 0.2–0.9 s
+per call for the expression-heavy operators (MinHash families, SimHash
+banding, boilerplate grams) at any scale factor.  ``durable_plan_memo``
+gives such an operator prepared-statement semantics: the FIRST call per
+(session, sf, gate constants) builds the plan, later calls get a fresh
+view of the same analyzed tree.  The tier survives the recompute reset
+by design — its builders are pure lazy trees whose only
+materialization points are ``cached()`` markers, re-armed empty on a
+warm hit — so a recompute rep skips only the py4j tree build, never
+any data work (contract pinned by ``test_durable_plan_memo_contract``
+and the eligibility tripwire in ``test_properties.py``).
 
-1. PURE PLAN BUILDERS ONLY.  The function must return a LAZY frame
-   and perform no per-call work a caller could observe (no driver
-   collect of results, no ``createDataFrame`` of computed rows, no
-   streaming-query lifecycle, no sink writes).  Memoizing an eager
-   operator would skip its work entirely — that is caching the
-   answer, not the plan.  (BFS/LPA, the stream harnesses, and the
-   REST paths therefore stay unwrapped.)
-2. DECLARE EVERY MODULE CONSTANT THAT SHAPES THE PLAN.  The memo key
-   includes the named globals read at call time, so a test that
-   monkeypatches a broadcast budget or prune gate gets a fresh build
-   (and the patched plan), never a stale hit.
+Rules for a durable builder:
+
+1. PURE LAZY PLAN BUILDERS ONLY.  No driver collect of results, no
+   ``createDataFrame`` of computed rows, no localCheckpoint, no
+   streaming-query lifecycle, no sink writes: retaining an eager
+   operator would skip its work entirely — caching the answer, not
+   the plan.
+2. DECLARE EVERY MODULE CONSTANT THAT SHAPES THE PLAN.  The key holds
+   the named globals read at call time, so a test that monkeypatches
+   a broadcast budget or prune gate gets a fresh build, never a stale
+   hit.
 """
 
 from __future__ import annotations
 
 import functools
+import threading
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 __all__ = [
-    "plan_memo",
+    "Memo",
+    "PlanMemo",
     "durable_plan_memo",
     "cached",
-    "evict_dead_sessions",
-    "clear",
     "clear_materializations",
 ]
 
-# (applicationId, sf, qualname, gate-values...) → DataFrame
-_PLAN_CACHE: dict[tuple, DataFrame] = {}
+POLICIES = ("recompute", "prepared", "retained")
 
-# second tier (r14 verdict #4): prepared plans that SURVIVE
-# ``clear_materializations`` — the recompute-warm reset.  Eligible
-# builders are pure lazy trees over source parquet whose ONLY
-# materialization points are ``cache()`` markers on intermediates,
-# registered via ``cached()`` so a warm hit can re-arm them after
-# ``spark.catalog.clearCache()`` dropped their registrations.  This
-# stays recompute-honest: retaining the DataFrame object retains the
-# ANALYZED EXPRESSION TREE only (0.2-0.9 s of py4j round trips to
-# rebuild — a fixed driver cost, the prepared-statement role); no
-# result blocks survive the reset, so the next action re-executes the
-# full distributed dataflow and re-populates the re-armed caches from
-# scratch.  Builders embedding a localCheckpoint or any other eager
-# materialization are NOT eligible (a retained plan over released
-# checkpoint blocks is both dishonest and broken).  ``clear()`` (the
-# full reset used by cold-path measurements) drops this tier too.
-# value: (DataFrame, cache handles in build = dependency order)
-_DURABLE_PLAN_CACHE: dict[tuple, tuple[DataFrame, tuple[DataFrame, ...]]] = {}
+# every Memo ever declared, in declaration order
+_REGISTRY: list["Memo"] = []
+
+
+class Memo(dict):
+    """A session-scoped memo: a dict whose keys are tuples with the
+    ``applicationId`` first, built by ``key``, registered for reset."""
+
+    def __init__(self, policy: str, release: Callable | None = None):
+        super().__init__()
+        if policy not in POLICIES:
+            raise ValueError(f"unknown memo policy {policy!r}")
+        self.policy = policy
+        self.release = release
+        _REGISTRY.append(self)
+
+    def key(self, spark: SparkSession, *parts) -> tuple:
+        """The entry key for ``parts`` in ``spark``'s session; entries of
+        every other (hence stopped) session are evicted first."""
+        app = spark.sparkContext.applicationId
+        for k in [k for k in self if k[0] != app]:
+            del self[k]
+        return (app, *parts)
+
+    def _released(self):
+        return self.values()
+
+    def drop(self) -> None:
+        """Run the release hook on every entry, then forget them all."""
+        if self.release is not None:
+            for value in self._released():
+                self.release(value)
+        self.clear()
+
+
+class PlanMemo(Memo):
+    """A memo keyed by logical plan: one value per (session, plan), the
+    plan-keyed semantics ``cache()`` has natively."""
+
+    def lookup(self, df: DataFrame, build: Callable[[], object]):
+        """The value memoized for ``df``'s plan, else ``build()``'s.
+
+        Entries sit in ``semanticHash`` buckets of (plan, value) pairs,
+        matched by ``sameSemantics``: colliding plans coexist in one
+        bucket instead of one overwriting (and orphaning) the other.
+        """
+        bucket = self.setdefault(self.key(df.sparkSession, df.semanticHash()), [])
+        for plan, value in bucket:
+            if df.sameSemantics(plan):
+                return value
+        value = build()
+        bucket.append((df, value))
+        return value
+
+    def _released(self):
+        return (value for bucket in self.values() for _, value in bucket)
+
+
+def clear_materializations(
+    spark: SparkSession | None = None, drop_prepared_plans: bool = False
+) -> None:
+    """Forget every engine-owned materialization: drop every
+    ``recompute`` memo (running its release hook) and — when a session
+    is passed — the whole Spark block cache; ``drop_prepared_plans=True``
+    drops the ``prepared`` tier too.  ``retained`` memos stay.
+
+    This is the shared cold-path reset used by the growth batteries,
+    bench.py's recompute-warm and cold columns, and the benchmark:
+    after it, the next action on any operator re-executes the full
+    distributed dataflow.
+    """
+    if spark is not None:
+        spark.catalog.clearCache()
+    dropped = ("recompute", "prepared") if drop_prepared_plans else ("recompute",)
+    for memo in _REGISTRY:
+        if memo.policy in dropped:
+            memo.drop()
+
+
+# --- the prepared-plan tier -------------------------------------------
+
+
+def _unpersist_handles(handles) -> None:
+    """Unpersist a prepared plan's registered cache handles, so a
+    dropped entry leaves no orphaned cache-manager registration behind
+    (whether or not the caller clears the cache)."""
+    for h in handles:
+        try:
+            h.unpersist(blocking=False)
+        except Exception:
+            # handle owned by a stopped session — nothing to free
+            pass
+
+
+# (applicationId, sf, qualname, gate values) → (DataFrame, cache
+# handles in build = dependency order).  Retaining the DataFrame
+# retains the ANALYZED EXPRESSION TREE only; no result blocks survive
+# a reset, so the next action re-executes the full dataflow and
+# re-populates the re-armed caches from scratch.
+_DURABLE_PLAN_CACHE = Memo("prepared", release=lambda entry: _unpersist_handles(entry[1]))
 
 # collector active during a durable build (nesting-safe via
 # save/restore in the decorator; thread-local so a concurrent build —
 # e.g. a streaming micro-batch thread calling a helper that uses
 # cached() — can never attribute handles to another thread's entry)
-import threading as _threading
-
-_TLS = _threading.local()
+_TLS = threading.local()
 
 # every durable_plan_memo-decorated builder, for the eligibility
 # tripwire test (no localCheckpoint / collect / sink in their source)
@@ -129,182 +211,18 @@ def _fresh_view(df: DataFrame) -> DataFrame:
     return df.select("*")
 
 
-def evict_dead_sessions(memo: dict | None = None) -> int:
-    """Drop memo entries owned by stopped sessions.
-
-    Works on any session-keyed memo whose keys are tuples with the
-    ``applicationId`` FIRST (the repo-wide memo convention —
-    checkpoints, trade/co-purchase edges, candidate counts, boiler
-    grams, this module's plan cache).  PySpark allows exactly ONE
-    active SparkContext per process, so every appId other than the
-    live one is provably dead; a long-lived process that creates
-    several sessions (test runners, notebook restarts) would
-    otherwise accumulate entries holding py4j handles to stopped
-    JVMs.  Returns the number evicted.
-    """
-    memo = _PLAN_CACHE if memo is None else memo
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    live = None
-    if sc is not None and getattr(sc, "_jsc", None) is not None:
-        live = sc.applicationId
-    dead = [k for k in memo if k[0] != live]
-    for k in dead:
-        del memo[k]
-    return len(dead)
-
-
-def _drop_durable_tier() -> None:
-    """Clear ``_DURABLE_PLAN_CACHE``, unpersisting every registered
-    cache handle first (blocking=False).  Dropping an entry without
-    this would orphan its cache-manager registrations: the handles'
-    plans stay registered JVM-side until something else calls
-    ``spark.catalog.clearCache()`` (bench does; a bare ``clear()``
-    caller does not)."""
-    for _, handles in _DURABLE_PLAN_CACHE.values():
-        for h in handles:
-            try:
-                h.unpersist(blocking=False)
-            except Exception:
-                # handle owned by a stopped session — nothing to free
-                pass
-    _DURABLE_PLAN_CACHE.clear()
-
-
-def clear() -> None:
-    """Drop every prepared plan, BOTH tiers (cold-path measurements
-    use this so they cannot hit a warm plan)."""
-    _PLAN_CACHE.clear()
-    _drop_durable_tier()
-
-
-def clear_materializations(
-    spark: SparkSession | None = None, drop_prepared_plans: bool = False
-) -> None:
-    """Forget EVERY engine-owned materialization: prepared plans,
-    session-keyed memos (CC labels, trade/co-purchase edges, PQ
-    codebooks, pair graphs, boiler grams), released localCheckpoints,
-    and — when a session is passed — the whole Spark block cache.
-
-    This is the shared cold-path reset used by BOTH the growth
-    batteries and bench.py's RECOMPUTE-warm column: after calling it,
-    the next action on any operator re-executes the full distributed
-    dataflow (a memo or cache hit is corpus-size-insensitive, so any
-    measurement claiming to scale must start from here).  Imports are
-    lazy so this module keeps zero operator dependencies.
-
-    Deliberately RETAINED (not derived compute, so keeping them warm
-    cannot flatter a recompute measurement): ``schema._TABLE_MEMO``
-    (lazy scan handles — pure plans, the catalog role) and the
-    one-shot fixture/sink STAGING memos (``ingest._STREAM_SRC_MEMO``/
-    ``_DOC_STAGE_MEMO``, ``relational._FMT_STAGE_MEMO``,
-    ``python_datasource._SINK_STAGE_MEMO``/``_STREAM_SINK_MEMO``) —
-    those hold /tmp paths of deterministic staged artifacts whose
-    re-write would leak a copy per rep; the artifact is the test
-    subject, not a cached answer.  Everything DERIVED — trained
-    models (k-means, PQ), the persisted IVF index, pair graphs,
-    edges, labels, checkpoints, prepared plans — is cleared here.
-    """
-    from iceberg_kafka_playgroud_spark import checkpoints
-    from iceberg_kafka_playgroud_spark.operators import advanced as _adv
-    from iceberg_kafka_playgroud_spark.operators import dedup as _dd
-    from iceberg_kafka_playgroud_spark.operators import similarity as _sim
-
-    if spark is not None:
-        spark.catalog.clearCache()
-    for bucket in list(checkpoints._CKPT_MEMO.values()):
-        for _, ck in bucket:
-            checkpoints.release_local_checkpoint(ck)
-    checkpoints._CKPT_MEMO.clear()
-    for bucket in list(_dd._CC_MEMO.values()):
-        for _, lbl in bucket:
-            checkpoints.release_local_checkpoint(lbl)
-    _dd._CC_MEMO.clear()
-    _dd._N_CAND_MEMO.clear()
-    for e in _adv._TRADE_EDGES_MEMO.values():
-        e.unpersist()
-    _adv._TRADE_EDGES_MEMO.clear()
-    for e, _, _ in _adv._COPURCHASE_MEMO.values():
-        e.unpersist()
-    _adv._COPURCHASE_MEMO.clear()
-    # single-tier prepared plans hold references into the cleared
-    # caches/memos — a recompute rep must rebuild those.  The durable
-    # tier survives by contract (its plans embed nothing but re-armable
-    # cache markers); ``drop_prepared_plans=True`` drops it too, for
-    # cold-path measurements that must pay plan construction.
-    _PLAN_CACHE.clear()
-    if drop_prepared_plans:
-        _drop_durable_tier()
-    _sim._PQ_MODEL_MEMO.clear()
-    _sim._PAIRS_MEMO.clear()
-    # trained k-means models and the persisted IVF index are derived
-    # compute too: a recompute rep must re-run Lloyd training and the
-    # index build (the index dirs are atexit-reclaimed; ~MBs each)
-    for assigned, _ in _sim._KM_MODEL_MEMO.values():
-        assigned.unpersist()
-    _sim._KM_MODEL_MEMO.clear()
-    _sim._IVF_INDEX_MEMO.clear()
-    # (the boilerplate gram frame moved from a bespoke memo into the
-    # durable plan tier in r15 — clearCache() above dropped its blocks;
-    # the re-armed cache marker repopulates on the next action)
-
-
-def _memo_key(
-    fn: Callable, gate_names: tuple, spark: SparkSession, sf: str
-) -> tuple:
-    """ONE key recipe for both plan-cache tiers: (applicationId, sf,
-    qualname, gate values looked up in the builder's module at CALL
-    time).  Kept single-sourced so a schema change can never split
-    the tiers' keyspaces."""
-    gates = tuple(fn.__globals__[g] for g in gate_names)
-    return (
-        spark.sparkContext.applicationId,
-        sf.rstrip("/"),
-        fn.__qualname__,
-        gates,
-    )
-
-
-def plan_memo(*gate_names: str) -> Callable:
-    """Decorator for ``fn(spark, sf) -> DataFrame`` pure plan builders.
+def durable_plan_memo(*gate_names: str) -> Callable:
+    """Decorator for ``fn(spark, sf) -> DataFrame`` pure lazy plan
+    builders whose prepared plan survives ``clear_materializations``
+    (see the module docstring for eligibility).
 
     ``gate_names`` are module-global constants (looked up in the
     function's own module at CALL time) that alter the built plan —
     broadcast budgets, prune gates, iteration counts.  Their current
-    values are part of the memo key.
-    """
-
-    def deco(fn: Callable) -> Callable:
-        @functools.wraps(fn)
-        def wrapped(spark: SparkSession, sf: str) -> DataFrame:
-            evict_dead_sessions()
-            key = _memo_key(fn, gate_names, spark, sf)
-            hit = _PLAN_CACHE.get(key)
-            if hit is not None:
-                return hit
-            df = fn(spark, sf)
-            _PLAN_CACHE[key] = df
-            return df
-
-        wrapped.__wrapped__ = fn
-        return wrapped
-
-    return deco
-
-
-def durable_plan_memo(*gate_names: str) -> Callable:
-    """``plan_memo`` whose prepared plan survives
-    ``clear_materializations`` (see ``_DURABLE_PLAN_CACHE``).
-
-    Eligibility is STRICTER than ``plan_memo``: the builder must be a
-    pure lazy tree over source parquet whose only materialization
-    points are ``cached()`` markers (never ``localCheckpoint`` /
-    ``createDataFrame`` of computed rows / sink writes).  Eager
-    plan-SHAPING statistics (e.g. a candidate count that gates a
-    broadcast hint) are permitted and run once per (session, sf,
-    gates) — that is query-planner work a production engine reads
-    from table stats, not answer computation.
+    values are part of the key.  Eager plan-SHAPING statistics (e.g. a
+    candidate count that gates a broadcast hint) are permitted and run
+    once per (session, sf, gates) — query-planner work a production
+    engine reads from table stats, not answer computation.
 
     On a warm hit after ``spark.catalog.clearCache()``, every
     registered cache handle whose registration was dropped is
@@ -318,9 +236,10 @@ def durable_plan_memo(*gate_names: str) -> Callable:
 
         @functools.wraps(fn)
         def wrapped(spark: SparkSession, sf: str) -> DataFrame:
-            evict_dead_sessions()
-            evict_dead_sessions(_DURABLE_PLAN_CACHE)
-            key = _memo_key(fn, gate_names, spark, sf)
+            gates = tuple(fn.__globals__[g] for g in gate_names)
+            key = _DURABLE_PLAN_CACHE.key(
+                spark, sf.rstrip("/"), fn.__qualname__, gates
+            )
             hit = _DURABLE_PLAN_CACHE.get(key)
             if hit is not None:
                 df, handles = hit
@@ -339,11 +258,7 @@ def durable_plan_memo(*gate_names: str) -> Callable:
                 # the cache registrations it made before failing (the
                 # entry is never stored, so nothing would ever re-arm
                 # or drop them)
-                for h in _TLS.collect:
-                    try:
-                        h.unpersist(blocking=False)
-                    except Exception:
-                        pass
+                _unpersist_handles(_TLS.collect)
                 raise
             finally:
                 _TLS.collect = prev
@@ -353,7 +268,6 @@ def durable_plan_memo(*gate_names: str) -> Callable:
             # keyed memos stay consistent across build and hit calls)
             return _fresh_view(df)
 
-        wrapped.__wrapped__ = fn
         return wrapped
 
     return deco

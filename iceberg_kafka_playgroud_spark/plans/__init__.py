@@ -1,1 +1,1 @@
-from .inspect import physical_plan, assert_broadcast, assert_pushed_filters  # noqa: F401
+from .inspect import physical_plan  # noqa: F401

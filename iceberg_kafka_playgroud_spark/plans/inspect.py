@@ -16,17 +16,3 @@ def physical_plan(df: DataFrame, mode: str = "formatted") -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
         df._jdf.queryExecution(), mode
     )
-
-
-def assert_pushed_filters(df: DataFrame, *fragments: str) -> None:
-    plan = physical_plan(df)
-    assert "PushedFilters: [" in plan, plan
-    pushed = plan.split("PushedFilters")[1]
-    for frag in fragments:
-        assert frag in pushed, f"filter {frag!r} not pushed:\n{plan}"
-
-
-def assert_broadcast(df: DataFrame, min_count: int = 1) -> None:
-    plan = physical_plan(df)
-    n = plan.count("BroadcastHashJoin") + plan.count("BroadcastNestedLoopJoin")
-    assert n >= min_count, f"expected ≥{min_count} broadcast joins:\n{plan}"

@@ -16,8 +16,12 @@ credentials change; nothing in the engine code assumes local mode.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+DRIVER_HEAP_SHARE = 0.5
+DRIVER_HEAP_CAP_GB = 48
 
 
 def default_parallelism() -> int:
@@ -26,6 +30,19 @@ def default_parallelism() -> int:
     if env:
         return max(1, int(env))
     return os.cpu_count() or 8
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap: env override, else about half of the host's
+    MemTotal, capped at 48g — a heap larger than the host lets the
+    kernel's OOM killer stop the driver JVM mid-run."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    with open(meminfo) as fh:
+        kb = int(re.search(r"MemTotal:\s+(\d+)", fh.read()).group(1))
+    gb = int(kb * DRIVER_HEAP_SHARE / 1024**2)
+    return f"{max(1, min(DRIVER_HEAP_CAP_GB, gb))}g"
 
 
 def get_spark(
@@ -67,7 +84,7 @@ def get_spark(
         # fixture events.parquet stores TIMESTAMP(NANOS); read as long and
         # convert in the loader (Spark has no native ns timestamps)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # split small parquet inputs across cores: a single sf0.1 file is

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
+from ..plan_cache import Memo
+
 FABRIC_BASE_MS = 1740787200000
 DEFAULT_ROWS = 1200
 DEFAULT_PARTS = 8
@@ -207,7 +209,7 @@ def _register_sink(spark: SparkSession) -> None:
     _register(spark, JsonlCommitDataSource)
 
 
-_SINK_STAGE_MEMO: dict = {}
+_SINK_STAGE_MEMO = Memo("retained")
 
 
 def sink_python_datasource(spark: SparkSession, sf: str) -> DataFrame:
@@ -225,7 +227,7 @@ def sink_python_datasource(spark: SparkSession, sf: str) -> DataFrame:
 
     _register(spark)
     _register_sink(spark)
-    key = (spark.sparkContext.applicationId, "jsonl_sink")
+    key = _SINK_STAGE_MEMO.key(spark, "jsonl_sink")
     out = _SINK_STAGE_MEMO.get(key)
     if out is None:
         import atexit
@@ -509,7 +511,7 @@ class JsonlEpochSinkDataSource(DataSource):
         return JsonlEpochStreamWriter(self.options)
 
 
-_STREAM_SINK_MEMO: dict = {}
+_STREAM_SINK_MEMO = Memo("retained")
 
 
 def sink_python_stream_writer(spark: SparkSession, sf: str) -> DataFrame:
@@ -529,7 +531,7 @@ def sink_python_stream_writer(spark: SparkSession, sf: str) -> DataFrame:
 
     _register_stream(spark)
     _register(spark, JsonlEpochSinkDataSource)
-    key = (spark.sparkContext.applicationId, "jsonl_stream_sink")
+    key = _STREAM_SINK_MEMO.key(spark, "jsonl_stream_sink")
     out = _STREAM_SINK_MEMO.get(key)
     if out is None:
         import atexit

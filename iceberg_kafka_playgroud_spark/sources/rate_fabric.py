@@ -7,10 +7,9 @@ the wall clock with modulo arithmetic (``kafka_publisher.py:303-330``):
 array of derived previous amounts.
 
 Here the same derivations are pure Column expressions, so one
-definition serves three shapes:
+definition serves two shapes:
 
 - a deterministic batch frame from ``spark.range`` (tests, oracles),
-- a streaming frame from the ``rate`` source (ingest pipeline ST1),
 - a re-mapping of the driver's ``events`` fixture into PurchaseEvent
   shape (the ``purchase_event_fabric`` oracle query).
 
@@ -77,14 +76,3 @@ def purchase_events_batch(
     base = spark.range(n)
     ts_ms = (F.lit(start_ms) + F.col("id") * 5000).cast("long")
     return base.select(*purchase_event_columns(F.col("id"), ts_ms))
-
-
-def purchase_events_stream(spark: SparkSession, rows_per_second: int = 1) -> DataFrame:
-    """Streaming PurchaseEvents from the rate source (ST1)."""
-    rate = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .load()
-    )
-    ts_ms = F.unix_millis(F.col("timestamp"))
-    return rate.select(*purchase_event_columns(F.col("value"), ts_ms))

@@ -825,60 +825,14 @@ def test_candidate_broadcast_gate_fallback_matches(spark, sf_dir, monkeypatch):
     assert [r.asDict() for r in wj.collect()] == [r.asDict() for r in base_wj]
 
 
-SOME_GATE = 7
-
-
-def test_plan_memo_contract(spark, sf_dir):
-    """plan_memo: same (session, sf, gates) → the SAME DataFrame object
-    (no rebuild); a changed gate constant → a FRESH build keyed
-    separately (monkeypatched budgets can never hit a stale plan); the
-    wrapper never swallows execution — the returned frame is lazy."""
-    from iceberg_kafka_playgroud_spark import plan_cache
-
-    calls = {"n": 0}
-
-    @plan_cache.plan_memo("SOME_GATE")
-    def build(sp, sf):
-        calls["n"] += 1
-        from pyspark.sql import functions as F
-
-        return sp.range(3).select((F.col("id") * SOME_GATE).alias("x"))
-
-    a = build(spark, sf_dir)
-    b = build(spark, sf_dir)
-    assert a is b and calls["n"] == 1
-    global SOME_GATE
-    old = SOME_GATE
-    try:
-        SOME_GATE = 8
-        c = build(spark, sf_dir)
-        assert c is not a and calls["n"] == 2
-        # the gate value the plan was built under is the one executed
-        assert [r["x"] for r in c.collect()] == [0, 8, 16]
-        assert [r["x"] for r in a.collect()] == [0, 7, 14]
-    finally:
-        SOME_GATE = old
-    plan_cache.clear()
-    d = build(spark, sf_dir)
-    assert d is not a and calls["n"] == 3
-
-
 def test_memo_eviction_drops_dead_sessions(spark, sf_dir):
     """Session-keyed memos evict entries owned by stopped sessions
     (ADVICE r10 #1): only ONE SparkContext can be live per process, so
-    any other applicationId is dead and its py4j handles must go."""
-    from iceberg_kafka_playgroud_spark.plan_cache import evict_dead_sessions
+    any other applicationId is dead and its py4j handles must go.  The
+    real memos only hold live-session entries after any access."""
+    from iceberg_kafka_playgroud_spark.operators import advanced, dedup
 
     live = spark.sparkContext.applicationId
-    fake = {
-        ("app-dead-123", "sf0.x", "q"): object(),
-        (live, "sf0.y", "q"): object(),
-    }
-    assert evict_dead_sessions(fake) == 1
-    assert list(fake) == [(live, "sf0.y", "q")]
-
-    # the real memos only hold live-session entries after any access
-    from iceberg_kafka_playgroud_spark.operators import advanced, dedup
 
     dedup._minhash_candidates(spark, sf_dir)
     sh, cand = dedup._minhash_candidates(spark, sf_dir)
@@ -886,6 +840,34 @@ def test_memo_eviction_drops_dead_sessions(spark, sf_dir):
     advanced._trade_edges(spark, sf_dir)
     for memo in (dedup._N_CAND_MEMO, advanced._TRADE_EDGES_MEMO):
         assert all(k[0] == live for k in memo)
+
+
+def test_every_registered_memo_evicts_dead_sessions(spark):
+    """Every memo in the session registry drops a dead session's
+    entries on lookup — the trained models, the IVF index and the
+    staging memos included."""
+    import importlib
+    import pkgutil
+
+    import iceberg_kafka_playgroud_spark as pkg
+    from iceberg_kafka_playgroud_spark import plan_cache
+
+    for info in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + "."):
+        try:
+            importlib.import_module(info.name)
+        except ImportError:
+            continue
+    dead = ("app-dead-123", "planted")
+    probe = spark.range(1).selectExpr("'memo-eviction-probe' AS p")
+    assert len(plan_cache._REGISTRY) >= 16
+    for memo in plan_cache._REGISTRY:
+        memo[dead] = []
+        if isinstance(memo, plan_cache.PlanMemo):
+            assert memo.lookup(probe, lambda: 0) == 0
+            del memo[memo.key(spark, probe.semanticHash())]
+        else:
+            assert memo.get(memo.key(spark, "probe")) is None
+        assert dead not in memo, memo.policy
 
 
 def test_boilerplate_docs_single_cache_entry(spark, sf_dir):
@@ -1019,18 +1001,21 @@ def test_sql_scripting_conf_restored(spark, sf_dir):
 
 
 def test_plan_memo_gate_constants_bust_cache(spark, sf_dir, monkeypatch):
-    """Every plan-shaping module constant must be in the plan_memo key:
-    monkeypatching a gate after a warm call must produce a FRESH plan,
-    never a stale hit (plan_cache.py rule #2). Exercised on the r11
-    adjudicated site: graph_triangle_count × PAIR_MIN_SUPPORT."""
-    warm = advanced.graph_triangle_count(spark, sf_dir)
-    again = advanced.graph_triangle_count(spark, sf_dir)
+    """Every module constant that shapes a memoized value must be in its
+    memo key: monkeypatching a gate after a warm call must produce a
+    FRESH value, never a stale hit. Exercised on the co-purchase edge
+    memo × PAIR_MIN_SUPPORT (the graph the triangle count reads)."""
+    warm = advanced._copurchase_stats(spark, sf_dir)
+    again = advanced._copurchase_stats(spark, sf_dir)
     assert again is warm  # same gates -> memo hit
     monkeypatch.setattr(
         advanced, "PAIR_MIN_SUPPORT", advanced.PAIR_MIN_SUPPORT + 1
     )
-    fresh = advanced.graph_triangle_count(spark, sf_dir)
-    assert fresh is not warm  # patched gate -> fresh build
+    fresh = advanced._copurchase_stats(spark, sf_dir)
+    # patched gate -> a fresh edge list, pruned at the stricter support
+    assert fresh[0] is not warm[0] and fresh[1] <= warm[1]
+    stale = fresh[0].where(f"n_orders < {advanced.PAIR_MIN_SUPPORT}")
+    assert stale.count() == 0
 
 
 def test_near_dup_threshold_binds_at_call_time(spark, sf_dir, monkeypatch):
@@ -1117,8 +1102,8 @@ def test_durable_plan_memo_contract(spark, sf_dir):
     clear_materializations (same object, no rebuild) yet every
     materialized block is gone after the reset — a warm hit must
     RECOMPUTE; gate changes key fresh builds; drop_prepared_plans=True
-    and clear() both drop the durable tier (cold paths pay plan
-    construction)."""
+    drops the durable tier, with or without a session to clear the
+    block cache (cold paths pay plan construction)."""
     from pyspark.sql import functions as F
 
     from iceberg_kafka_playgroud_spark import plan_cache
@@ -1158,7 +1143,7 @@ def test_durable_plan_memo_contract(spark, sf_dir):
     plan_cache.clear_materializations(spark, drop_prepared_plans=True)
     d = build(spark, sf_dir)
     assert d is not a and calls["n"] == 3
-    plan_cache.clear()
+    plan_cache.clear_materializations(drop_prepared_plans=True)
     e = build(spark, sf_dir)
     assert e is not d and calls["n"] == 4
 
@@ -1221,9 +1206,9 @@ def test_durable_plan_not_frozen_across_reset(spark, tmp_path):
 
 def test_durable_drop_unpersists_handles(spark, sf_dir):
     """Regression pin (r15 ADVICE): dropping a durable entry — via
-    clear() or clear_materializations(drop_prepared_plans=True) —
-    must unpersist its registered cache handles, not just forget the
-    Python references; otherwise the cache-manager registrations (and
+    clear_materializations(drop_prepared_plans=True) — must unpersist
+    its registered cache handles, not just forget the Python
+    references; otherwise the cache-manager registrations (and
     any populated blocks) are orphaned until someone happens to call
     spark.catalog.clearCache()."""
     from pyspark.sql import functions as F
@@ -1237,24 +1222,18 @@ def test_durable_drop_unpersists_handles(spark, sf_dir):
         )
         return base.select(F.sum("x").alias("s"))
 
-    for drop in ("clear", "drop_prepared_plans"):
-        assert build(spark, f"sf-unpersist-{drop}").collect()[0]["s"] == 28
-        key = next(
-            k
-            for k in plan_cache._DURABLE_PLAN_CACHE
-            if k[1] == f"sf-unpersist-{drop}"
-        )
-        _, handles = plan_cache._DURABLE_PLAN_CACHE[key]
-        assert handles and all(h.storageLevel.useMemory for h in handles)
-        if drop == "clear":
-            plan_cache.clear()
-        else:
-            # NO spark arg: clearCache() must not be what frees them
-            plan_cache.clear_materializations(drop_prepared_plans=True)
-        assert key not in plan_cache._DURABLE_PLAN_CACHE
-        for h in handles:
-            lvl = h.storageLevel
-            assert not (lvl.useMemory or lvl.useDisk)
+    assert build(spark, "sf-unpersist").collect()[0]["s"] == 28
+    key = next(
+        k for k in plan_cache._DURABLE_PLAN_CACHE if k[1] == "sf-unpersist"
+    )
+    _, handles = plan_cache._DURABLE_PLAN_CACHE[key]
+    assert handles and all(h.storageLevel.useMemory for h in handles)
+    # NO spark arg: clearCache() must not be what frees them
+    plan_cache.clear_materializations(drop_prepared_plans=True)
+    assert key not in plan_cache._DURABLE_PLAN_CACHE
+    for h in handles:
+        lvl = h.storageLevel
+        assert not (lvl.useMemory or lvl.useDisk)
 
 
 def test_durable_build_failure_unpersists_partial_handles(spark):

@@ -972,62 +972,38 @@ def test_stream_sink_epoch_commit_protocol(tmp_path):
 
 
 def test_every_engine_memo_is_classified():
-    """Review-pass guard (r12): every module-level ``*_MEMO`` dict in
-    the package must be either CLEARED by
-    ``plan_cache.clear_materializations`` (derived compute — models,
-    indexes, pair graphs, labels, checkpoints) or on the documented
-    RETAINED list (lazy plan handles / one-shot staged fixture paths).
-    A new memo that is neither fails here, so it cannot silently stay
-    warm through the recompute-warm bench column or the growth
-    batteries (the exact defect the r12 review found twice)."""
+    """Tripwire: every module-level ``*_MEMO``/``*_CACHE`` dict in the
+    package must be a memo registered with ``plan_cache``'s session
+    registry, which gives it the applicationId key prefix, dead-session
+    eviction, a release hook and a reset policy.  A hand-rolled memo
+    dict fails here, so it cannot silently stay warm through the
+    recompute-warm bench column or the growth batteries; a memo that
+    is registered but bound to no module global fails too."""
     import importlib
     import pkgutil
 
     import iceberg_kafka_playgroud_spark as pkg
+    from iceberg_kafka_playgroud_spark import plan_cache
 
-    CLEARED = {
-        "checkpoints._CKPT_MEMO",
-        "operators.dedup._CC_MEMO",
-        "operators.dedup._N_CAND_MEMO",
-        "operators.advanced._TRADE_EDGES_MEMO",
-        "operators.advanced._COPURCHASE_MEMO",
-        "operators.similarity._PQ_MODEL_MEMO",
-        "operators.similarity._PAIRS_MEMO",
-        "operators.similarity._KM_MODEL_MEMO",
-        "operators.similarity._IVF_INDEX_MEMO",
-    }
-    RETAINED = {
-        # lazy scan handles — pure plans, no materialization
-        "schema._TABLE_MEMO",
-        # one-shot staged fixture/sink artifacts (paths in /tmp whose
-        # re-write would leak a copy per rep; the artifact is the test
-        # subject, not derived compute)
-        "streaming.ingest._STREAM_SRC_MEMO",
-        "streaming.ingest._DOC_STAGE_MEMO",
-        "operators.relational._FMT_STAGE_MEMO",
-        "sources.python_datasource._SINK_STAGE_MEMO",
-        "sources.python_datasource._STREAM_SINK_MEMO",
-    }
-    found = set()
+    found, stray = {}, []
     for info in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + "."):
         try:
             mod = importlib.import_module(info.name)
         except ImportError:
             continue
-        rel = info.name.removeprefix(pkg.__name__ + ".")
         for attr, val in vars(mod).items():
-            if attr.endswith("_MEMO") and isinstance(val, dict):
-                found.add(f"{rel}.{attr}")
-    unclassified = found - CLEARED - RETAINED
-    assert not unclassified, (
-        "new engine memo(s) neither cleared by clear_materializations "
-        f"nor on its documented retained list: {sorted(unclassified)} — "
-        "classify them (clear derived compute; document staging/plan "
-        "handles) in plan_cache.clear_materializations AND this test"
+            if attr.endswith(("_MEMO", "_CACHE")) and isinstance(val, dict):
+                if isinstance(val, plan_cache.Memo):
+                    found[id(val)] = val
+                else:
+                    stray.append(f"{info.name}.{attr}")
+    assert not stray, (
+        f"hand-rolled memo dict(s) {stray}: declare them as "
+        "plan_cache.Memo / PlanMemo with a reset policy"
     )
-    # the cleared list must actually exist (catch renames)
-    missing = CLEARED - found
-    assert not missing, f"expected memos vanished: {sorted(missing)}"
+    registered = {id(m) for m in plan_cache._REGISTRY}
+    assert set(found) == registered
+    assert {m.policy for m in found.values()} == set(plan_cache.POLICIES)
 
 
 def test_durable_builders_are_eligible():

@@ -31,41 +31,17 @@ sys.path.insert(0, str(ROOT))
 # EDIT EACH ROUND: the round being prepared (enforces the
 # run-at-round-start invariant: this round's CORRECTNESS file must
 # not exist yet, or the staleness ordering would double-credit it).
-ROUND = 18
+ROUND = 19
+
+# the driver's correctness window: the FIRST this-many _PRIORITY entries
+WINDOW = 50
 
 # EDIT EACH ROUND: this round's dirty set, most-critical first.
-# r18: transitive consumers of this round's optimization commits
-# (AST call-graph trace from the registry to the changed functions:
-# the minhash verify cascade, the CC loop symmetrization, the
-# co-purchase pair packing, the trade-edge/dbscan symmetrization,
-# the simhash/payload/grams scan spreads, the PQ qrow paths, and the
-# rebalance single-slice RDD).  Headline bench queries first.
-DIRTY = [
-    # headline rows whose executed plan changed
-    "dedup_connected_components", "dedup_cluster_canonical",
-    "dedup_incremental_cc", "dedup_minhash_lsh", "dedup_weighted_jaccard",
-    "dedup_similarity_histogram", "dedup_simhash", "dedup_simhash_hamming",
-    "graph_triangle_count", "graph_label_propagation",
-    "embedding_dbscan_core", "ann_pq_adc_topk", "ann_ivf_rebalance",
-    "multimodal_phash_near_dup", "text_boilerplate_coverage",
-    # registry consumers of the same changed builds
-    "dedup_incremental_minhash", "dedup_cluster_stats",
-    "dedup_cluster_cohesion", "dedup_loss_by_source",
-    "dedup_lexical_semantic_eval", "decontaminate_fuzzy_minhash",
-    "stream_incremental_dedup", "stream_decontaminate_gate",
-    "embedding_cluster_components", "embedding_cluster_canonical",
-    "item_item_cosine", "basket_association_rules",
-    "graph_link_prediction", "graph_kcore_peel", "graph_pagerank",
-    "graph_bfs_reachability",
-    "ann_ivfpq_residual_topk", "ann_topk_ivf", "ann_ivf_nprobe_curve",
-    "ann_ivf_balance_audit", "ann_index_persist_probe",
-    "multimodal_payload_dedup", "multimodal_audio_fingerprint",
-    "multimodal_scene_changes", "multimodal_silence_trim",
-    "multimodal_aspect_bucket", "multimodal_color_histogram",
-    "multimodal_features", "multimodal_frame_sample",
-    "multimodal_resize", "multimodal_audio_rms",
-]
-
+# r19: empty — the round replaced the engine's memo dicts with one
+# session registry and executed plans did not move (identical per-rep
+# job counts on every headline row); full-registry parity covers the
+# memo plumbing, so the window goes wholly to the stalest queries.
+DIRTY: list[str] = []
 
 def main() -> None:
     entry_path = ROOT / "__spark_entry__.py"
@@ -97,6 +73,11 @@ def main() -> None:
 
     import __spark_entry__ as entry
 
+    if len(DIRTY) > WINDOW:
+        raise SystemExit(
+            f"DIRTY ({len(DIRTY)}) exceeds the {WINDOW}-entry correctness "
+            "window: dirty operators past it would go unchecked"
+        )
     registry = list(entry.queries())
     missing_dirty = [d for d in DIRTY if d not in registry]
     if missing_dirty:
@@ -124,13 +105,13 @@ def main() -> None:
     entry_path.write_text(
         head + "_PRIORITY = [\n" + "\n".join(lines) + "\n]" + tail
     )
-    window = out[:50]
+    window = out[:WINDOW]
     stale_after = sorted(
-        {last.get(n, 0) for n in out[50:] if n not in DIRTY}
+        {last.get(n, 0) for n in out[WINDOW:] if n not in DIRTY}
     )
     print(f"window-50 head: {window[:8]} ...")
     print(f"rounds represented in post-window tail: {stale_after}")
-    n_old = sum(1 for n in out[50:] if last.get(n, 0) < 8)
+    n_old = sum(1 for n in out[WINDOW:] if last.get(n, 0) < 8)
     print(f"tail rows still pre-r8 after this window drains: {n_old}")
 
 
