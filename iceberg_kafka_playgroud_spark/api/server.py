@@ -27,6 +27,7 @@ import glob as _glob
 import json
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from .. import catalog as cat
 from ..schema import FIXTURE_TABLES, register_views
@@ -37,8 +38,15 @@ DEFAULT_TABLE_LIMIT = 100  # pyiceberg_rest_server.py:184
 
 def _json_rows(df: DataFrame, limit: int) -> list[dict]:
     """Result emission (K4): limit inside the plan, then JSON records —
-    the Spark analog of fetchdf().to_json(orient='records')."""
-    return [json.loads(r) for r in df.limit(limit).toJSON().collect()]
+    the Spark analog of fetchdf().to_json(orient='records').
+
+    Records are encoded by ``to_json`` inside the query, so a request is
+    one SQL execution and its jobs carry the session's tags;
+    ``toJSON()`` would run them through ``toJavaRDD`` outside one."""
+    return [
+        json.loads(r[0])
+        for r in df.limit(limit).select(F.to_json(F.struct("*"))).collect()
+    ]
 
 
 def create_app(spark: SparkSession, sf_dir: str | None = None):

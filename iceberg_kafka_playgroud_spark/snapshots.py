@@ -24,11 +24,14 @@ With the Iceberg jar on the classpath, use the native path instead
 ``streaming.ingest.iceberg_available`` is the gate. This module is the
 jar-absent analog, not a replacement for the real runtime.
 
-100 TB posture: commits are metadata-only over the written files (the
-per-bucket counts come from a map-side groupBy, no re-read); a time-
-travel read opens exactly the manifest's file list, so planning cost is
-O(live files) and data files are never copied. Compaction is the only
-data-moving operation and is a straight repartition-rewrite.
+100 TB posture: a commit runs its input's plan exactly once — one
+write job — and each file's record count is read back from that file's
+Parquet footer (O(files) metadata reads, no Spark job), the way Iceberg
+takes ``record_count`` from the writer instead of re-scanning the
+input. A time-travel read opens exactly the manifest's file list, so
+planning cost is O(live files) and data files are never copied.
+Compaction is the only data-moving operation and is a straight
+repartition-rewrite.
 """
 
 from __future__ import annotations
@@ -77,27 +80,28 @@ def _schema_json(df: DataFrame) -> str:
     return df.schema.json()
 
 
-def _write_bucketed(df: DataFrame, out_dir: str) -> list[dict]:
-    """Write df partitioned by BUCKET_COL (one file per bucket) and
-    return file entries [{path, bucket, record_count}] with counts
-    taken from the dataframe itself — no post-write re-read."""
-    counts = {
-        r[BUCKET_COL]: r["cnt"]
-        for r in df.groupBy(BUCKET_COL).agg(F.count("*").alias("cnt")).collect()
-    }
-    # one task → exactly one file per bucket value
-    df.repartition(1).write.partitionBy(BUCKET_COL).parquet(out_dir)
-    entries = []
-    for f in sorted(_glob.glob(f"{out_dir}/{BUCKET_COL}=*/part-*.parquet")):
-        bucket = int(f.split(f"{BUCKET_COL}=")[1].split("/")[0])
-        entries.append(
-            {
-                "path": os.path.relpath(f, os.path.dirname(out_dir)),
-                "bucket": bucket,
-                "record_count": counts[bucket],
-            }
-        )
-    return entries
+def _write_bucketed(
+    df: DataFrame, out_dir: str, part_col: str = BUCKET_COL
+) -> list[dict]:
+    """Write df partitioned by ``part_col`` in ONE Spark job and return
+    file entries [{path, <part_col>, record_count}].
+
+    One task writes, so each partition value gets one file (more only
+    if ``spark.sql.files.maxRecordsPerFile`` splits it). Each
+    record_count is that file's Parquet footer ``num_rows`` — what the
+    writer produced, as Iceberg records it — so the input's plan runs
+    exactly once and a split partition is never overcounted."""
+    import pyarrow.parquet as pq
+
+    df.repartition(1).write.partitionBy(part_col).parquet(out_dir)
+    return [
+        {
+            "path": os.path.relpath(f, os.path.dirname(out_dir)),
+            part_col: int(f.split(f"{part_col}=")[1].split("/")[0]),
+            "record_count": pq.ParquetFile(f).metadata.num_rows,
+        }
+        for f in sorted(_glob.glob(f"{out_dir}/{part_col}=*/part-*.parquet"))
+    ]
 
 
 def commit_append(spark: SparkSession, table_dir: str, df: DataFrame) -> int:
@@ -555,23 +559,10 @@ def snapshot_partition_evolution(spark: SparkSession, sf: str) -> DataFrame:
         .drop(BUCKET_COL)
         .withColumn("band", F.floor(cents / BAND_CENTS).cast("long"))
     )
-    counts = {
-        r["band"]: r["cnt"]
-        for r in df3.groupBy("band").agg(F.count("*").alias("cnt")).collect()
-    }
     out = os.path.join(table_dir, DATA_DIR, "s3")
-    df3.repartition(1).write.partitionBy("band").parquet(out)
-    spec2_files = []
-    for f in sorted(_glob.glob(f"{out}/band=*/part-*.parquet")):
-        band = int(f.split("band=")[1].split("/")[0])
-        spec2_files.append(
-            {
-                "path": os.path.relpath(f, os.path.join(table_dir, DATA_DIR)),
-                "spec": "band",
-                "band": band,
-                "record_count": counts[band],
-            }
-        )
+    spec2_files = [
+        {**f, "spec": "band"} for f in _write_bucketed(df3, out, "band")
+    ]
     _write_manifest(
         table_dir,
         {
@@ -1578,8 +1569,8 @@ def snapshot_metadata_only_count(spark: SparkSession, sf: str) -> DataFrame:
     cross-checked against the actual data scan. At 100 TB this is the
     difference between an instant dashboard tile and a full table
     scan; the cross-check column proves the manifest stats the engine
-    trusts are truthful (they are written from the dataframe at commit
-    time, never re-derived).
+    trusts are truthful (each is the written file's own footer row
+    count, taken at commit time, never re-derived from the input).
     """
     table_dir = _build_demo_table(spark)
     meta = (

@@ -6,9 +6,11 @@ asserts the two deliberate bug-fixes: limits pushed into the plan and
 honored on the table-scan path.
 """
 
+import json
+
 import pytest
 
-from iceberg_kafka_playgroud_spark.api.server import create_app
+from iceberg_kafka_playgroud_spark.api.server import _json_rows, create_app
 
 
 @pytest.fixture(scope="module")
@@ -152,3 +154,28 @@ def test_streams_endpoint(client):
     r = client.get("/streams")
     assert r.status_code == 200
     assert "streams" in r.get_json()
+
+
+def test_json_rows_match_tojson_records(spark):
+    # the in-query to_json encoder must emit exactly what toJSON() does,
+    # across the types a REST result can hold: decimal, date, timestamp,
+    # null (omitted field), array, map, nested struct, a duplicated
+    # column name and a dotted one
+    df = spark.sql(
+        """
+        SELECT CAST(12345.678 AS DECIMAL(18, 3)) AS price,
+               DATE'2025-03-01' AS d,
+               TIMESTAMP'2025-03-01 12:34:56.789' AS ts,
+               CAST(NULL AS STRING) AS missing,
+               array(1, 2, NULL) AS arr,
+               map('k', 1.5D, 'z', CAST(NULL AS DOUBLE)) AS m,
+               named_struct('a', 1, 'b', named_struct('c', 'x')) AS st,
+               id AS dup, id * 10 AS dup,
+               id AS `dotted.name`
+        FROM range(3)
+        """
+    )
+    expected = [json.loads(r) for r in df.toJSON().collect()]
+    assert _json_rows(df, 1000) == expected
+    assert len(expected) == 3 and "missing" not in expected[0]
+    assert _json_rows(df, 2) == expected[:2]

@@ -103,3 +103,54 @@ def test_rollback_preserves_history_and_moves_pointer(spark):
         sn.read_snapshot(spark, td, 6).count()
         == sn.read_snapshot(spark, td, 2).count() + 100
     )
+
+
+def test_record_counts_are_per_file_when_a_bucket_splits(spark, tmp_path):
+    """A bucket written as several files (maxRecordsPerFile) gives each
+    file its own row count, so total_records is the table's row count:
+    500 rows in 4 buckets at 100 rows per file are 8 files."""
+    import pyarrow.parquet as pq
+
+    t = str(tmp_path / "tbl")
+    key = "spark.sql.files.maxRecordsPerFile"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "100")
+    try:
+        S.commit_append(spark, t, S._fabric_slice(spark, 0, 500))
+    finally:
+        spark.conf.set(key, prev)
+    m = S.load_manifest(t, 1)
+    assert len(m["files"]) == 8
+    assert m["total_records"] == 500 == S.read_snapshot(spark, t).count()
+    for f in m["files"]:
+        path = str(tmp_path / "tbl" / S.DATA_DIR / f["path"])
+        assert f["record_count"] == pq.read_table(path).num_rows
+
+
+def test_commit_reads_its_input_once(spark, tmp_path):
+    """An append or a merge commit evaluates its input exactly once:
+    a UDF ticking an accumulator per input row ends at the row count,
+    not a multiple of it (no separate counting pass before the write)."""
+    from pyspark.sql import functions as F
+
+    acc = spark.sparkContext.accumulator(0)
+
+    def tick(b):
+        acc.add(1)
+        return b
+
+    tick_udf = F.udf(tick, "long")
+
+    def ticked(lo, hi):
+        return S._fabric_slice(spark, lo, hi).withColumn(
+            S.BUCKET_COL, tick_udf(S.BUCKET_COL)
+        )
+
+    t = str(tmp_path / "tbl")
+    S.commit_append(spark, t, ticked(0, 200))
+    assert acc.value == 200
+    acc.value = 0
+    updates = ticked(190, 210)  # 10 matched + 10 inserted
+    sid = S.merge_upsert(spark, t, updates, "timestamp")
+    assert acc.value == 20
+    assert S.load_manifest(t, sid)["total_records"] == 210

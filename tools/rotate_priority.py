@@ -31,17 +31,36 @@ sys.path.insert(0, str(ROOT))
 # EDIT EACH ROUND: the round being prepared (enforces the
 # run-at-round-start invariant: this round's CORRECTNESS file must
 # not exist yet, or the staleness ordering would double-credit it).
-ROUND = 19
+ROUND = 20
 
 # the driver's correctness window: the FIRST this-many _PRIORITY entries
 WINDOW = 50
 
 # EDIT EACH ROUND: this round's dirty set, most-critical first.
-# r19: empty — the round replaced the engine's memo dicts with one
-# session registry and executed plans did not move (identical per-rep
-# job counts on every headline row); full-registry parity covers the
-# memo plumbing, so the window goes wholly to the stalest queries.
-DIRTY: list[str] = []
+# r20: the snapshot write path — every commit is now one write job with
+# record counts read from the written files' Parquet footers, so each
+# row whose call graph reaches _write_bucketed or commit_append (the
+# snapshot_* rows and the streaming snapshot ingest) is rechecked.
+DIRTY: list[str] = [
+    "snapshot_partition_evolution",
+    "snapshot_metadata_only_count",
+    "snapshot_file_size_audit",
+    "snapshot_upsert_rows",
+    "snapshot_sorted_rewrite",
+    "snapshot_wap_publish",
+    "snapshot_delete_rows",
+    "stream_snapshot_ingest",
+    "snapshot_time_travel",
+    "snapshot_files",
+    "snapshot_expire",
+    "snapshot_incremental_read",
+    "snapshot_changelog_diff",
+    "snapshot_orphan_audit",
+    "snapshot_branch_tag",
+    "snapshot_rollback",
+    "snapshot_incremental_view_maintenance",
+    "snapshot_mor_read",
+]
 
 def main() -> None:
     entry_path = ROOT / "__spark_entry__.py"
